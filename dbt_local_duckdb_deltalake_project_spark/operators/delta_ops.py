@@ -228,7 +228,7 @@ def delta_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         mode="append",
         merge_schema=True,  # adding a column requires the explicit opt-in
     )
-    return tbl.read(spark, merge_schema=True).select(
+    return tbl.read(spark).select(
         "o_orderkey", "o_totalprice", "channel"
     )
 

@@ -219,12 +219,7 @@ class ModelGraph:
         if m.materialized == "table":
             tbl.write(df, mode="overwrite")
         elif m.materialized == "incremental":
-            try:
-                current = tbl.read(spark)
-                exists = True
-            except Exception:  # noqa: BLE001 — first run, nothing to read
-                exists = False
-            if not exists:
+            if tbl.latest_version < 0:  # first run, nothing committed yet
                 tbl.write(df, mode="overwrite")
             elif m.unique_key:
                 tbl.merge(
@@ -236,7 +231,7 @@ class ModelGraph:
             else:
                 new = df
                 if m.watermark_col:
-                    hw = current.agg(F.max(m.watermark_col)).collect()[0][0]
+                    hw = tbl.read(spark).agg(F.max(m.watermark_col)).collect()[0][0]
                     if hw is not None:
                         new = df.filter(F.col(m.watermark_col) > F.lit(hw))
                 tbl.write(new, mode="append")

@@ -56,6 +56,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
+        # no "[Stage N:>" progress bars in captured logs
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         # FAIR scheduling (optimization guide §2.6): the bench drains
         # 468 queries through a 16-thread pool; under FIFO a query

@@ -20,15 +20,19 @@ Capabilities the stack exercises:
 - DELETE / MERGE upsert (copy-on-write rewrites, like Delta)
 - OPTIMIZE-style compaction and VACUUM of unreachable files
 
-Scale notes (100 TB): reads are plain multi-path parquet scans, so column
-pruning / predicate pushdown all still fire; the log is O(#commits)
-driver-side JSON (a real deployment adds checkpoint parquet every N
-commits — same replay semantics), never shipped to executors. Commit =
-atomic rename of the next numbered log file, exactly the spec's
-put-if-absent contract. MERGE shuffles both sides on the key — on a
-cluster you'd bucket the target by the merge key to make re-merges
-shuffle-free; with delta-spark installed the same calls map 1:1 onto
-``DeltaTable`` operations and these tables are readable as real Delta.
+Scale notes (100 TB): every operation starts from one ``Snapshot``, a
+single driver-side log replay (the newest parquet checkpoint, written
+every ``CHECKPOINT_INTERVAL`` commits, plus the newer JSON commits),
+never shipped to executors. A read takes its file list AND its schema
+from that snapshot, as Delta does: the scan is a plain multi-path
+parquet scan with the logged schema supplied, so no parquet footer is
+opened to infer one and building the DataFrame launches no Spark job;
+column pruning and predicate pushdown still fire. Commit = atomic
+rename of the next numbered log file, exactly the spec's put-if-absent
+contract. MERGE shuffles both sides on the key — on a cluster you'd
+bucket the target by the merge key to make re-merges shuffle-free;
+with delta-spark installed the same calls map 1:1 onto ``DeltaTable``
+operations and these tables are readable as real Delta.
 """
 
 from __future__ import annotations
@@ -40,9 +44,11 @@ import shutil
 import struct
 import time
 import uuid
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 
@@ -70,6 +76,130 @@ CHECKPOINT_INTERVAL = 10
 
 _LAST_CHECKPOINT = "_last_checkpoint"
 
+# Above this many paths Spark lists a scan's files with a Spark job; a
+# read lifts it to its own file count for the scan's construction, so the
+# log's file list is stat'ed on the driver and no job runs.
+_LISTING_THRESHOLD_KEY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+@contextmanager
+def _session_conf(sess: SparkSession, key: str, value: str):
+    """Set one session conf for the duration of a block, restoring the
+    caller's value after."""
+    prev = sess.conf.get(key, None)
+    sess.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            sess.conf.unset(key)
+        else:
+            sess.conf.set(key, prev)
+
+
+def _removes(paths) -> list[dict]:
+    now = int(time.time() * 1000)
+    return [
+        {"remove": {"path": p, "deletionTimestamp": now, "dataChange": True}}
+        for p in paths
+    ]
+
+
+class Snapshot:
+    """The table state at one version, folded from ONE log replay: the
+    protocol, the newest ``metaData``, the live ``add`` actions in commit
+    order and the newest ``txn`` version per appId. Each public
+    ``DeltaLikeTable`` operation builds one and passes it down. None is
+    cached across calls: a table path can be deleted and re-created."""
+
+    def __init__(self, version: int = -1):
+        self.version = version
+        self.protocol: dict = PROTOCOL
+        self.metadata: dict | None = None
+        self.live: dict[str, dict] = {}
+        self.txns: dict[str, int] = {}
+
+    def apply(self, actions) -> "Snapshot":
+        for act in actions:
+            if "protocol" in act:
+                self.protocol = act["protocol"]
+            elif "metaData" in act:
+                self.metadata = act["metaData"]
+            elif "txn" in act:
+                t_ = act["txn"]
+                self.txns[t_["appId"]] = max(
+                    self.txns.get(t_["appId"], -1), int(t_.get("version", -1))
+                )
+            elif "add" in act:
+                self.live[act["add"]["path"]] = act["add"]
+            elif "remove" in act:
+                self.live.pop(act["remove"]["path"], None)
+        return self
+
+    def advanced(self, actions: list[dict], version: int) -> "Snapshot":
+        """The state after committing ``actions`` as ``version``."""
+        nxt = Snapshot(version)
+        nxt.protocol, nxt.metadata = self.protocol, self.metadata
+        nxt.live, nxt.txns = dict(self.live), dict(self.txns)
+        return nxt.apply(actions)
+
+    @property
+    def adds(self) -> list[dict]:
+        return list(self.live.values())
+
+    @property
+    def configuration(self) -> dict:
+        return dict((self.metadata or {}).get("configuration") or {})
+
+    def fields(self) -> list[dict]:
+        """The logged schema's fields in JSON form ([] before any metaData)."""
+        if self.metadata is None:
+            return []
+        return json.loads(self.metadata["schemaString"])["fields"]
+
+    def schema(self, physical: bool = False) -> StructType | None:
+        """The logged schema (None before any metaData). ``physical``
+        renames mapped fields to the column names the files carry."""
+        if self.metadata is None:
+            return None
+        fields = self.fields()
+        if physical:
+            phys = dict(self.mapped_fields() or [])
+            fields = [{**f, "name": phys.get(f["name"], f["name"])} for f in fields]
+        return StructType.fromJson({"type": "struct", "fields": fields})
+
+    def mapped_fields(self) -> list[tuple[str, str]] | None:
+        """[(logical, physical)] when column mapping is active, else None.
+
+        Physical names are what the parquet files carry; logical names
+        are what readers see. The mapping lives in the schemaString's
+        per-field ``delta.columnMapping.physicalName`` metadata, exactly
+        the protocol's name-mapping mode."""
+        if self.configuration.get(_COLUMN_MAPPING_KEY) != "name":
+            return None
+        return [
+            (
+                f["name"],
+                (f.get("metadata") or {}).get(_PHYSICAL_NAME_KEY, f["name"]),
+            )
+            for f in self.fields()
+        ]
+
+    def check_constraints(self) -> dict[str, str]:
+        prefix = "delta.constraints."
+        return {
+            k[len(prefix):]: v
+            for k, v in self.configuration.items()
+            if k.startswith(prefix)
+        }
+
+    def generated_columns(self) -> dict[str, str]:
+        return {
+            f["name"]: f["metadata"]["delta.generationExpression"]
+            for f in self.fields()
+            if (f.get("metadata") or {}).get("delta.generationExpression")
+        }
+
 
 def _checkpoint_arrow_schema():
     """Checkpoint rows follow the protocol's action-struct shape (one
@@ -95,6 +225,7 @@ def _checkpoint_arrow_schema():
                         ("format", pa.struct([("provider", pa.string())])),
                         ("schemaString", pa.string()),
                         ("partitionColumns", pa.list_(pa.string())),
+                        ("configuration", pa.map_(pa.string(), pa.string())),
                         ("createdTime", pa.int64()),
                     ]
                 ),
@@ -213,49 +344,31 @@ class DeltaLikeTable:
                 val = row.get(kind)
                 if val is None:
                     continue
-                if kind == "add":
-                    val = dict(val)
-                    val["partitionValues"] = dict(val.get("partitionValues") or [])
+                if kind in ("add", "metaData"):
+                    # arrow returns maps as [(key, value)] lists
+                    key = "partitionValues" if kind == "add" else "configuration"
+                    val = {**val, key: dict(val.get(key) or [])}
                 acts.append({kind: val})
         return acts
 
-    def _write_checkpoint(self, version: int) -> None:
-        """Compact the log state at ``version`` into
+    def _write_checkpoint(self, snap: Snapshot) -> None:
+        """Compact the state ``snap`` holds into
         ``<v>.checkpoint.parquet`` + ``_last_checkpoint`` (both the
-        protocol's names). The checkpoint holds the REPLAYED state —
-        protocol, latest metaData, live add set — so a reader starts
-        there and only replays newer JSON commits. JSON commit files are
-        kept (history/time-travel before the checkpoint still works);
-        VACUUM owns physical cleanup."""
+        protocol's names): protocol, latest metaData, the newest txn per
+        appId (so idempotent writers stay deduped past checkpointed
+        commits) and the live add set, so a reader starts there and only
+        replays newer JSON commits. JSON commit files are kept
+        (history/time-travel before the checkpoint still works); VACUUM
+        owns physical cleanup."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        acts = self._replay_json(upto=version)
-        protocol = PROTOCOL
-        metadata = None
-        live: dict[str, dict] = {}
-        txns: dict[str, int] = {}
-        for act in acts:
-            if "protocol" in act:
-                protocol = act["protocol"]
-            elif "metaData" in act:
-                metadata = act["metaData"]
-            elif "txn" in act:
-                # the spec: checkpoints carry the newest txn per appId so
-                # idempotent writers stay deduped past checkpointed commits
-                t_ = act["txn"]
-                txns[t_["appId"]] = max(
-                    txns.get(t_["appId"], -1), int(t_.get("version", -1))
-                )
-            elif "add" in act:
-                live[act["add"]["path"]] = act["add"]
-            elif "remove" in act:
-                live.pop(act["remove"]["path"], None)
-        rows: list[dict] = [{"protocol": protocol}, {"metaData": metadata}]
+        version = snap.version
+        rows: list[dict] = [{"protocol": snap.protocol}, {"metaData": snap.metadata}]
         rows += [
-            {"txn": {"appId": k, "version": v}} for k, v in sorted(txns.items())
+            {"txn": {"appId": k, "version": v}} for k, v in sorted(snap.txns.items())
         ]
-        rows += [{"add": a} for a in live.values()]
+        rows += [{"add": a} for a in snap.adds]
         schema = _checkpoint_arrow_schema()
         cols: dict[str, list] = {name: [] for name in schema.names}
         for row in rows:
@@ -271,6 +384,9 @@ class DeltaLikeTable:
                         "format": {"provider": val.get("format", {}).get("provider")},
                         "schemaString": val.get("schemaString"),
                         "partitionColumns": val.get("partitionColumns", []),
+                        "configuration": list(
+                            (val.get("configuration") or {}).items()
+                        ),
                         "createdTime": val.get("createdTime"),
                     }
                 cols[name].append(val)
@@ -286,69 +402,71 @@ class DeltaLikeTable:
             json.dump({"version": version, "size": len(rows)}, f)
         os.replace(lc_tmp, os.path.join(self._log_dir, _LAST_CHECKPOINT))
 
-    def _replay_json(self, upto: int | None = None, start: int = 0) -> list[dict]:
-        files = self._commit_files()
-        files = files[start : upto + 1 if upto is not None else None]
-        acts: list[dict] = []
-        for fname in files:
-            with open(os.path.join(self._log_dir, fname)) as f:
-                acts.extend(json.loads(ln) for ln in f if ln.strip())
-        return acts
+    def snapshot(self, as_of: int | None = None) -> Snapshot:
+        """The table state at version ``as_of`` (default: latest), from
+        ONE log replay. Starts from the newest parquet checkpoint at or
+        before that version when one exists — pre-checkpoint JSON
+        commits are never opened — and falls back to full JSON replay
+        otherwise (e.g. time travel to a version older than the
+        checkpoint).
 
-    def _actions(self, upto: int | None = None) -> list[dict]:
-        """All actions of commits 0..upto (default: all), in order.
-
-        Starts from the newest parquet checkpoint at or before ``upto``
-        when one exists — pre-checkpoint JSON commits are never opened —
-        and falls back to full JSON replay otherwise (e.g. time travel to
-        a version older than the checkpoint)."""
-        cp = self._last_checkpoint()
-        if cp is not None and (upto is None or cp["version"] <= upto):
-            try:
-                base = self._read_checkpoint(cp["version"])
-            except OSError:
-                return self._guard_protocol(self._replay_json(upto=upto))
-            return self._guard_protocol(
-                base + self._replay_json(upto=upto, start=cp["version"] + 1)
-            )
-        return self._guard_protocol(self._replay_json(upto=upto))
-
-    def _guard_protocol(self, actions: list[dict]) -> list[dict]:
-        """PROTOCOL.md reader requirement: a client MUST refuse to read a
+        PROTOCOL.md reader requirement: a client MUST refuse to read a
         table whose protocol action demands a reader version above what
         it implements — silently proceeding returns wrong results once
         an unsupported feature (e.g. deletion vectors at reader v3 in
         real Delta) changes file interpretation. Checked on every replay
         so a foreign writer's protocol upgrade mid-log is honored."""
+        files = self._commit_files()
+        version = len(files) - 1 if as_of is None else min(as_of, len(files) - 1)
+        snap, start = Snapshot(version), 0
+        cp = self._last_checkpoint()
+        if cp is not None and cp["version"] <= version:
+            try:
+                snap.apply(self._read_checkpoint(cp["version"]))
+                start = cp["version"] + 1
+            except OSError:
+                pass
+        for fname in files[start : version + 1]:
+            with open(os.path.join(self._log_dir, fname)) as f:
+                snap.apply(json.loads(ln) for ln in f if ln.strip())
         supported = PROTOCOL["minReaderVersion"]
-        for act in actions:
-            p = act.get("protocol")
-            if p and int(p.get("minReaderVersion") or 1) > supported:
-                raise ValueError(
-                    f"table at {self.path} requires minReaderVersion "
-                    f"{p['minReaderVersion']}; this reader supports "
-                    f"{supported} — upgrade the reader, do not guess"
-                )
-        return actions
+        if int(snap.protocol.get("minReaderVersion") or 1) > supported:
+            raise ValueError(
+                f"table at {self.path} requires minReaderVersion "
+                f"{snap.protocol['minReaderVersion']}; this reader supports "
+                f"{supported} — upgrade the reader, do not guess"
+            )
+        return snap
 
     def _active_files(self, as_of: int | None = None) -> list[dict]:
-        """Replay add/remove actions → the live ``add`` set at a version."""
-        live: dict[str, dict] = {}
-        for act in self._actions(upto=as_of):
-            if "add" in act:
-                live[act["add"]["path"]] = act["add"]
-            elif "remove" in act:
-                live.pop(act["remove"]["path"], None)
-        return list(live.values())
+        """The live ``add`` set at a version."""
+        return self.snapshot(as_of).adds
 
-    def _commit(self, actions: list[dict], operation: str | None = None) -> int:
+    def _state_after(
+        self, base: Snapshot | None, actions: list[dict], version: int
+    ) -> Snapshot:
+        """The state ``version`` commits: ``base`` advanced by ``actions``
+        when the commit directly follows it (no other writer got in
+        between), else a replay."""
+        if base is not None and version == base.version + 1:
+            return base.advanced(actions, version)
+        return self.snapshot(version)
+
+    def _commit(
+        self,
+        actions: list[dict],
+        operation: str | None = None,
+        base: Snapshot | None = None,
+    ) -> int:
         """Optimistic-concurrency commit (the spec's put-if-absent
         contract): stage the actions to a temp file, then publish with
         ``os.link`` — which FAILS if the target commit number already
         exists (``os.replace`` would silently clobber a concurrent
         writer's commit). On collision, re-read the log and retry at the
         next version, exactly Delta's optimistic retry loop. Object
-        stores swap the hard-link for their native if-none-match put."""
+        stores swap the hard-link for their native if-none-match put.
+        ``base`` is the snapshot the actions were built from; a
+        checkpoint is folded from it instead of a fresh replay."""
         os.makedirs(self._log_dir, exist_ok=True)
         tmp = os.path.join(self._log_dir, f".tmp-{uuid.uuid4().hex}")
         while True:
@@ -378,7 +496,7 @@ class DeltaLikeTable:
                 if os.path.exists(tmp):
                     os.remove(tmp)
             if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-                self._write_checkpoint(version)
+                self._write_checkpoint(self._state_after(base, actions, version))
             return version
 
     def commit_timestamp(self, version: int) -> int:
@@ -461,19 +579,13 @@ class DeltaLikeTable:
         # Spark's default INT96 timestamps carry NO parquet min/max
         # statistics — data skipping on a temporal column (the 100 TB
         # win) would silently never fire. Write TIMESTAMP_MICROS (what
-        # Delta itself writes) for the duration of the stage, restoring
-        # the caller's conf after.
-        sess = df.sparkSession
-        conf_key = "spark.sql.parquet.outputTimestampType"
-        prev = sess.conf.get(conf_key, None)
-        sess.conf.set(conf_key, "TIMESTAMP_MICROS")
-        try:
+        # Delta itself writes) for the duration of the stage.
+        with _session_conf(
+            df.sparkSession,
+            "spark.sql.parquet.outputTimestampType",
+            "TIMESTAMP_MICROS",
+        ):
             writer.parquet(tmp)
-        finally:
-            if prev is None:
-                sess.conf.unset(conf_key)
-            else:
-                sess.conf.set(conf_key, prev)
         now = int(time.time() * 1000)
         adds = []
         for dirpath, _dirs, fnames in sorted(os.walk(tmp)):
@@ -507,60 +619,64 @@ class DeltaLikeTable:
     def _metadata_action(
         self,
         df: DataFrame,
+        snap: Snapshot,
+        mode: str,
         partition_by: list[str] | None = None,
-        schema_string: str | None = None,
     ) -> dict:
-        if schema_string is None:
-            # preserve per-field metadata (generation expressions etc.)
-            # across writes — df.schema alone would drop it
-            sj = json.loads(df.schema.json())
-            prev = self._latest_metadata()
-            if prev is not None:
-                prev_fields = {
-                    f["name"]: f
-                    for f in json.loads(prev["schemaString"])["fields"]
+        """The metaData a write commits. Per-field metadata (generation
+        expressions, column-mapping physical names) carries over from the
+        logged schema — df.schema alone would drop it. An append keeps
+        every logged field (a frame that omits a nullable column must not
+        shrink the table's schema) and adds only the evolved columns; an
+        overwrite takes ``df``'s fields."""
+        logged = snap.fields()
+        by_name = {f["name"]: f for f in logged}
+        incoming = json.loads(df.schema.json())["fields"]
+        if mode == "append":
+            fields = logged + [f for f in incoming if f["name"] not in by_name]
+        else:
+            fields = [
+                {
+                    **f,
+                    "metadata": {
+                        **(by_name.get(f["name"], {}).get("metadata") or {}),
+                        **(f.get("metadata") or {}),
+                    },
                 }
-                for f in sj["fields"]:
-                    pf = prev_fields.get(f["name"])
-                    if pf and pf.get("metadata"):
-                        f["metadata"] = {
-                            **pf["metadata"],
-                            **(f.get("metadata") or {}),
-                        }
-            schema_string = json.dumps(sj)
+                for f in incoming
+            ]
         return {
             "metaData": {
                 "id": str(uuid.uuid4()),
                 "format": {"provider": "parquet", "options": {}},
-                "schemaString": schema_string,
+                "schemaString": json.dumps({"type": "struct", "fields": fields}),
                 "partitionColumns": partition_by or [],
                 # Table configuration (constraints, properties) survives
                 # writes — only explicit ALTERs change it, as in Delta.
-                "configuration": self._latest_configuration(),
+                "configuration": snap.configuration,
                 "createdTime": int(time.time() * 1000),
             }
         }
 
-    def _latest_configuration(self) -> dict:
-        metas = [a["metaData"] for a in self._actions() if "metaData" in a]
-        if not metas:
-            return {}
-        return dict(metas[-1].get("configuration") or {})
+    def _alter_base(self) -> tuple[Snapshot, dict]:
+        """The latest snapshot and a copy of its metaData, for an ALTER."""
+        snap = self.snapshot()
+        if snap.metadata is None:
+            raise ValueError(f"cannot ALTER empty table {self.path}")
+        return snap, dict(snap.metadata)
+
+    def _alter_configuration(self, update: dict[str, str], operation: str) -> int:
+        snap, meta = self._alter_base()
+        meta["configuration"] = {**snap.configuration, **update}
+        return self._commit([{"metaData": meta}], operation=operation, base=snap)
 
     def add_check_constraint(self, name: str, expr_sql: str) -> int:
         """``ALTER TABLE ... ADD CONSTRAINT name CHECK (expr)``: stored
         as ``delta.constraints.<name>`` in the metaData configuration
         (the protocol's representation), enforced by every subsequent
         write. Metadata-only commit — O(1) regardless of table size."""
-        metas = [a["metaData"] for a in self._actions() if "metaData" in a]
-        if not metas:
-            raise ValueError(f"cannot ALTER empty table {self.path}")
-        meta = dict(metas[-1])
-        cfg = dict(meta.get("configuration") or {})
-        cfg[f"delta.constraints.{name}"] = expr_sql
-        meta["configuration"] = cfg
-        return self._commit(
-            [{"metaData": meta}], operation="ADD CONSTRAINT"
+        return self._alter_configuration(
+            {f"delta.constraints.{name}": expr_sql}, "ADD CONSTRAINT"
         )
 
     def set_properties(self, props: dict[str, str]) -> int:
@@ -568,37 +684,23 @@ class DeltaLikeTable:
         the metaData configuration — one metadata-only commit, O(1) in
         table size, and (like constraints) the configuration is carried
         forward by every subsequent write."""
-        metas = [a["metaData"] for a in self._actions() if "metaData" in a]
-        if not metas:
-            raise ValueError(f"cannot ALTER empty table {self.path}")
-        meta = dict(metas[-1])
-        cfg = dict(meta.get("configuration") or {})
-        cfg.update({str(k): str(v) for k, v in props.items()})
-        meta["configuration"] = cfg
-        return self._commit(
-            [{"metaData": meta}], operation="SET TBLPROPERTIES"
+        return self._alter_configuration(
+            {str(k): str(v) for k, v in props.items()}, "SET TBLPROPERTIES"
         )
 
     def properties(self) -> dict[str, str]:
-        return dict(self._latest_configuration())
+        return self.snapshot().configuration
 
     def check_constraints(self) -> dict[str, str]:
-        prefix = "delta.constraints."
-        return {
-            k[len(prefix):]: v
-            for k, v in self._latest_configuration().items()
-            if k.startswith(prefix)
-        }
+        return self.snapshot().check_constraints()
 
-    def _enforce_constraints(self, df: DataFrame) -> None:
+    def _enforce_constraints(self, df: DataFrame, snap: Snapshot) -> None:
         """CHECK semantics (SQL standard, as Delta enforces them): a row
         violates only when the expression evaluates FALSE — NULL passes.
         The probe is a limit-1 existence scan per constraint pushed into
         the incoming frame's plan, so a clean 100 TB append costs one
         extra pass over the NEW data only, never the table."""
-        from pyspark.sql import functions as F
-
-        for name, expr in self.check_constraints().items():
+        for name, expr in snap.check_constraints().items():
             bad = df.filter(F.expr(expr).eqNullSafe(F.lit(False))).limit(1)
             if bad.count() > 0:
                 raise ValueError(
@@ -606,45 +708,7 @@ class DeltaLikeTable:
                     f"to {self.path}"
                 )
 
-    def _latest_schema(self):
-        from pyspark.sql.types import StructType
-
-        metas = [a["metaData"] for a in self._actions() if "metaData" in a]
-        if not metas:
-            return None
-        return StructType.fromJson(json.loads(metas[-1]["schemaString"]))
-
     # -- column mapping (metadata-only rename / drop) ----------------------
-    def _latest_metadata(self, as_of: int | None = None) -> dict | None:
-        metas = [
-            a["metaData"] for a in self._actions(upto=as_of) if "metaData" in a
-        ]
-        return metas[-1] if metas else None
-
-    def _mapped_fields(
-        self, as_of: int | None = None
-    ) -> list[tuple[str, str]] | None:
-        """[(logical, physical)] when column mapping is active, else None.
-
-        Physical names are what the parquet files carry; logical names
-        are what readers see. The mapping lives in the schemaString's
-        per-field ``delta.columnMapping.physicalName`` metadata, exactly
-        the protocol's name-mapping mode."""
-        meta = self._latest_metadata(as_of=as_of)
-        if meta is None:
-            return None
-        cfg = meta.get("configuration") or {}
-        if cfg.get(_COLUMN_MAPPING_KEY) != "name":
-            return None
-        sj = json.loads(meta["schemaString"])
-        return [
-            (
-                f["name"],
-                (f.get("metadata") or {}).get(_PHYSICAL_NAME_KEY, f["name"]),
-            )
-            for f in sj["fields"]
-        ]
-
     def _mapping_metadata_action(
         self, meta: dict, fields: list[dict]
     ) -> dict:
@@ -662,7 +726,9 @@ class DeltaLikeTable:
             }
         }
 
-    def _guard_constraint_references(self, col: str, action: str) -> None:
+    def _guard_constraint_references(
+        self, col: str, action: str, snap: Snapshot
+    ) -> None:
         """Refuse ALTERs on a column a CHECK constraint or a generated
         column's expression references (the stored expressions name the
         LOGICAL column; renaming or dropping it would silently break
@@ -672,13 +738,13 @@ class DeltaLikeTable:
         references from OTHER columns' expressions block the ALTER."""
         import re
 
-        for name, expr in self.check_constraints().items():
+        for name, expr in snap.check_constraints().items():
             if re.search(rf"\b{re.escape(col)}\b", expr):
                 raise ValueError(
                     f"cannot {action} column {col!r}: referenced by CHECK "
                     f"constraint {name!r} ({expr}); DROP CONSTRAINT first"
                 )
-        for gname, expr in self._generated_columns().items():
+        for gname, expr in snap.generated_columns().items():
             if gname == col:
                 continue
             if re.search(rf"\b{re.escape(col)}\b", expr):
@@ -699,9 +765,7 @@ class DeltaLikeTable:
         value is rejected atomically), so derived partitioning/bucketing
         keys stay trustworthy however many writers feed the table.
         Metadata-only commit."""
-        meta = self._latest_metadata()
-        if meta is None:
-            raise ValueError(f"no schema committed yet at {self.path}")
+        snap, meta = self._alter_base()
         sj = json.loads(meta["schemaString"])
         if name in [f["name"] for f in sj["fields"]]:
             raise ValueError(f"column {name!r} already exists")
@@ -716,20 +780,14 @@ class DeltaLikeTable:
         return self._commit(
             [{"metaData": {**meta, "schemaString": json.dumps(sj)}}],
             operation="ADD COLUMN",
+            base=snap,
         )
 
     def _generated_columns(self) -> dict[str, str]:
-        meta = self._latest_metadata()
-        if meta is None:
-            return {}
-        return {
-            f["name"]: f["metadata"]["delta.generationExpression"]
-            for f in json.loads(meta["schemaString"])["fields"]
-            if (f.get("metadata") or {}).get("delta.generationExpression")
-        }
+        return self.snapshot().generated_columns()
 
-    def _apply_generated_columns(self, df: DataFrame) -> DataFrame:
-        for name, expr in self._generated_columns().items():
+    def _apply_generated_columns(self, df: DataFrame, snap: Snapshot) -> DataFrame:
+        for name, expr in snap.generated_columns().items():
             if name not in df.columns:
                 df = df.withColumn(name, F.expr(expr))
             else:
@@ -752,11 +810,9 @@ class DeltaLikeTable:
         schemaString changes, so renaming a column of a 100 TB table is
         one O(1) metaData commit, no file touched. Readers re-alias at
         scan time (a projection Catalyst collapses into the scan)."""
-        self._guard_constraint_references(old, "rename")
-        meta = self._latest_metadata()
-        if meta is None:
-            raise ValueError(f"no schema committed yet at {self.path}")
-        fields = json.loads(meta["schemaString"])["fields"]
+        snap, meta = self._alter_base()
+        self._guard_constraint_references(old, "rename", snap)
+        fields = snap.fields()
         names = [f["name"] for f in fields]
         if old not in names:
             raise ValueError(f"no column {old!r} (have {names})")
@@ -770,6 +826,7 @@ class DeltaLikeTable:
         return self._commit(
             [self._mapping_metadata_action(meta, fields)],
             operation="RENAME COLUMN",
+            base=snap,
         )
 
     def drop_column(self, name: str) -> int:
@@ -777,11 +834,9 @@ class DeltaLikeTable:
         the field leaves the logical schema; the physical column stays in
         the files (unreachable, reclaimed at the next rewrite), which is
         how Delta drops a column from a 100 TB table instantly."""
-        self._guard_constraint_references(name, "drop")
-        meta = self._latest_metadata()
-        if meta is None:
-            raise ValueError(f"no schema committed yet at {self.path}")
-        fields = json.loads(meta["schemaString"])["fields"]
+        snap, meta = self._alter_base()
+        self._guard_constraint_references(name, "drop", snap)
+        fields = snap.fields()
         if name not in [f["name"] for f in fields]:
             raise ValueError(f"no column {name!r}")
         kept = []
@@ -793,14 +848,17 @@ class DeltaLikeTable:
         return self._commit(
             [self._mapping_metadata_action(meta, kept)],
             operation="DROP COLUMN",
+            base=snap,
         )
 
-    def _enforce_schema(self, df: DataFrame, merge_schema: bool) -> None:
+    def _enforce_schema(
+        self, df: DataFrame, snap: Snapshot, merge_schema: bool
+    ) -> None:
         """Delta's schema-on-write: an append may not change a column's
         type, and may only ADD columns when schema merging is opted in
         (``mergeSchema``). Missing nullable columns are allowed (they
         read as NULL). Overwrites replace the schema freely."""
-        current = self._latest_schema()
+        current = snap.schema()
         if current is None:
             return
         cur = {f.name: f.dataType for f in current.fields}
@@ -827,12 +885,7 @@ class DeltaLikeTable:
         each commit with (appId, version) and skips any batch at or
         below the stored high-water mark — exactly-once sink semantics
         for streaming/retry loops without an external ledger."""
-        v = -1
-        for act in self._actions():
-            txn = act.get("txn")
-            if txn and txn.get("appId") == app_id:
-                v = max(v, int(txn.get("version", -1)))
-        return v
+        return self.snapshot().txns.get(app_id, -1)
 
     def write_idempotent(
         self,
@@ -851,15 +904,17 @@ class DeltaLikeTable:
         resolved by commit-time conflict rules; this layer's put-if-
         absent commit serializes writers, and the loser's retry re-reads
         the log — which then contains the winner's txn stamp.)"""
-        if app_version <= self.last_txn_version(app_id):
-            return self.latest_version, False
-        v = self.write(
+        snap = self.snapshot()
+        if app_version <= snap.txns.get(app_id, -1):
+            return snap.version, False
+        post = self._write(
             df,
+            snap,
             mode=mode,
             txn={"appId": app_id, "version": int(app_version)},
             **kw,
         )
-        return v, True
+        return post.version, True
 
     def write(
         self,
@@ -871,38 +926,39 @@ class DeltaLikeTable:
         txn: dict | None = None,
     ) -> int:
         """Commit ``df`` as a new version; returns the version number."""
+        return self._write(
+            df, self.snapshot(), mode, partition_by, merge_schema, operation, txn
+        ).version
+
+    def _write(
+        self,
+        df: DataFrame,
+        snap: Snapshot,
+        mode: str = "append",
+        partition_by: list[str] | None = None,
+        merge_schema: bool = False,
+        operation: str | None = None,
+        txn: dict | None = None,
+    ) -> Snapshot:
+        """``write`` against the state ``snap``; returns the committed
+        state."""
         assert mode in ("append", "overwrite")
         if operation is None:
             operation = "WRITE" if mode == "append" else "OVERWRITE"
-        df = self._apply_generated_columns(df)
+        df = self._apply_generated_columns(df, snap)
         if mode == "append":
-            self._enforce_schema(df, merge_schema)
-        if self.check_constraints():
-            self._enforce_constraints(df)
+            self._enforce_schema(df, snap, merge_schema)
+        self._enforce_constraints(df, snap)
         os.makedirs(self.path, exist_ok=True)
-        actions: list[dict] = []
-        if mode == "overwrite":
-            now = int(time.time() * 1000)
-            actions.extend(
-                {
-                    "remove": {
-                        "path": a["path"],
-                        "deletionTimestamp": now,
-                        "dataChange": True,
-                    }
-                }
-                for a in self._active_files()
-            )
-        staged_df, schema_string = self._physicalize(df, mode)
-        actions.extend(self._stage_data_files(staged_df, partition_by))
-        actions.append(
-            self._metadata_action(
-                df, partition_by, schema_string=schema_string
-            )
+        actions = _removes(snap.live) if mode == "overwrite" else []
+        actions.extend(
+            self._stage_data_files(self._physicalize(df, snap), partition_by)
         )
+        actions.append(self._metadata_action(df, snap, mode, partition_by))
         if txn is not None:
             actions.append({"txn": txn})
-        return self._commit(actions, operation=operation)
+        version = self._commit(actions, operation=operation, base=snap)
+        return self._state_after(snap, actions, version)
 
     def write_dynamic_partition_overwrite(
         self,
@@ -919,59 +975,33 @@ class DeltaLikeTable:
         beyond the O(live add actions) log walk — at 100 TB a one-day
         backfill commits O(that day's files), never O(table). The
         remove+add pair is one commit, so readers never see a gap."""
-        df = self._apply_generated_columns(df)
-        self._enforce_schema(df, False)
-        if self.check_constraints():
-            self._enforce_constraints(df)
-        staged_df, schema_string = self._physicalize(df, "append")
-        adds = self._stage_data_files(staged_df, partition_by)
+        snap = self.snapshot()
+        df = self._apply_generated_columns(df, snap)
+        self._enforce_schema(df, snap, False)
+        self._enforce_constraints(df, snap)
+        adds = self._stage_data_files(self._physicalize(df, snap), partition_by)
         touched = {
             tuple(sorted(a["add"]["partitionValues"].items())) for a in adds
         }
-        now = int(time.time() * 1000)
-        actions: list[dict] = [
-            {
-                "remove": {
-                    "path": a["path"],
-                    "deletionTimestamp": now,
-                    "dataChange": True,
-                }
-            }
-            for a in self._active_files()
+        actions = _removes(
+            a["path"]
+            for a in snap.adds
             if tuple(sorted((a.get("partitionValues") or {}).items()))
             in touched
-        ]
+        )
         actions.extend(adds)
-        actions.append(
-            self._metadata_action(
-                df, partition_by, schema_string=schema_string
-            )
-        )
-        return self._commit(actions, operation=operation)
+        actions.append(self._metadata_action(df, snap, "append", partition_by))
+        return self._commit(actions, operation=operation, base=snap)
 
-    def _physicalize(self, df: DataFrame, mode: str):
+    def _physicalize(self, df: DataFrame, snap: Snapshot) -> DataFrame:
         """Under column mapping, writers receive LOGICAL names but files
-        must carry PHYSICAL names (so old files and new files agree).
-        Returns (df-with-physical-names, mapping-aware schemaString), or
-        (df, None) when mapping is off."""
-        mapping = self._mapped_fields()
+        must carry PHYSICAL names (so old files and new files agree);
+        ``_metadata_action`` carries the mapping into the new schema."""
+        mapping = snap.mapped_fields()
         if not mapping:
-            return df, None
+            return df
         phys = dict(mapping)
-        staged = df.select(
-            [F.col(c).alias(phys.get(c, c)) for c in df.columns]
-        )
-        meta = self._latest_metadata()
-        sj = json.loads(meta["schemaString"])
-        by_name = {f["name"]: f for f in sj["fields"]}
-        df_fields = json.loads(df.schema.json())["fields"]
-        if mode == "overwrite":
-            fields = [by_name.get(f["name"], f) for f in df_fields]
-        else:  # append keeps the full logical schema, adds evolved cols
-            fields = sj["fields"] + [
-                f for f in df_fields if f["name"] not in by_name
-            ]
-        return staged, json.dumps({**sj, "fields": fields})
+        return df.select([F.col(c).alias(phys.get(c, c)) for c in df.columns])
 
     # -- reads ------------------------------------------------------------
     def live_files(
@@ -988,7 +1018,16 @@ class DeltaLikeTable:
         is the file-scan cost of a predicate under the current layout,
         which is how OPTIMIZE ZORDER's benefit is measured at 100 TB
         without touching data."""
-        active = self._active_files(as_of=as_of)
+        return self._prune(
+            self.snapshot(as_of).adds, partition_filter, stats_filter
+        )
+
+    @staticmethod
+    def _prune(
+        active: list[dict],
+        partition_filter: dict[str, str] | None,
+        stats_filter: dict[str, tuple] | None,
+    ) -> list[dict]:
         if partition_filter:
             active = [
                 a
@@ -1058,14 +1097,14 @@ class DeltaLikeTable:
         self,
         spark: SparkSession,
         as_of: int | None = None,
-        merge_schema: bool = False,
         partition_filter: dict[str, str] | None = None,
         stats_filter: dict[str, tuple] | None = None,
     ) -> DataFrame:
-        """Table state at version ``as_of`` (default: latest), by action
-        replay. ``merge_schema`` unions schemas across live files (Delta
-        schema evolution: columns added by later appends surface as NULL
-        for earlier files).
+        """Table state at version ``as_of`` (default: latest). The file
+        list AND the schema come from one log replay: the scan is given
+        the logged schema, so no parquet footer is opened to infer one and
+        building the DataFrame launches no Spark job. Files written before
+        a schema evolved read the columns they lack as NULL.
 
         ``partition_filter`` ({col: value}) prunes on the log's
         ``partitionValues`` metadata BEFORE any file is listed or opened
@@ -1080,15 +1119,25 @@ class DeltaLikeTable:
         kept, and the caller still applies the row-level filter; the
         win is unopened files, which on a date-sorted 100 TB table is
         most of them."""
-        if not self._commit_files():
+        return self._read(spark, self.snapshot(as_of), partition_filter, stats_filter)
+
+    def _read(
+        self,
+        spark: SparkSession,
+        snap: Snapshot,
+        partition_filter: dict[str, str] | None = None,
+        stats_filter: dict[str, tuple] | None = None,
+    ) -> DataFrame:
+        """``read`` of the state ``snap``."""
+        if snap.version < 0:
             raise ValueError(f"empty table at {self.path}")
-        unpruned = self._active_files(as_of=as_of)
+        unpruned = snap.adds
+        if not unpruned:
+            raise ValueError(
+                f"no live files at version {snap.version} in {self.path}"
+            )
         partitioned = any(a.get("partitionValues") for a in unpruned)
-        active = self.live_files(
-            as_of=as_of,
-            partition_filter=partition_filter,
-            stats_filter=stats_filter,
-        )
+        active = self._prune(unpruned, partition_filter, stats_filter)
 
         def base_path(paths: list[str]) -> str:
             """basePath for hive partition-column re-materialization.
@@ -1109,29 +1158,32 @@ class DeltaLikeTable:
                 while "=" in os.path.basename(d):
                     d = os.path.dirname(d)
                 roots.add(d)
-            return os.path.commonpath(sorted(roots)) if roots else self.path
+            return os.path.commonpath(sorted(roots))
 
         files = [os.path.join(self.path, a["path"]) for a in active]
-        if not files:
-            if unpruned:
-                # every file pruned away — an EMPTY relation with the
-                # table schema, not an error (a filter can match nothing)
-                first = os.path.join(self.path, unpruned[0]["path"])
-                reader = spark.read
-                if partitioned:
-                    reader = reader.option("basePath", base_path([first]))
-                return reader.parquet(first).limit(0)
-            raise ValueError(f"no live files at version {as_of} in {self.path}")
+        # every file pruned away: an EMPTY relation with the table schema,
+        # not an error (a filter can match nothing)
+        scan = files or [os.path.join(self.path, unpruned[0]["path"])]
         reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
+        schema = snap.schema(physical=True)
+        if schema is not None:
+            reader = reader.schema(schema)
         if partitioned:
-            reader = reader.option("basePath", base_path(files))
-        df = reader.parquet(*files)
+            reader = reader.option("basePath", base_path(scan))
+        listing = (
+            # 32 is Spark's default threshold
+            _session_conf(spark, _LISTING_THRESHOLD_KEY, str(len(scan)))
+            if len(scan) > 32
+            else nullcontext()
+        )
+        with listing:
+            df = reader.parquet(*scan)
+        if not files:
+            df = df.limit(0)
         dv_adds = [a for a in active if a.get("deletionVector")]
         if dv_adds:
             df = self._apply_deletion_vectors(spark, df, dv_adds)
-        mapping = self._mapped_fields(as_of=as_of)
+        mapping = snap.mapped_fields()
         if mapping:
             # physical→logical re-alias (and dropped-column subset): a
             # projection Catalyst collapses into the scan — column
@@ -1196,9 +1248,10 @@ class DeltaLikeTable:
         """
         # Delta DELETE removes rows where the predicate is TRUE; rows where
         # it evaluates NULL are KEPT (plain ~condition would drop them).
-        kept = self.read(spark).filter(~condition.eqNullSafe(True))
-        self.write(kept, mode="overwrite", operation="DELETE")
-        return self.read(spark)
+        snap = self.snapshot()
+        kept = self._read(spark, snap).filter(~condition.eqNullSafe(True))
+        post = self._write(kept, snap, mode="overwrite", operation="DELETE")
+        return self._read(spark, post)
 
     def delete_with_dv(
         self,
@@ -1224,7 +1277,8 @@ class DeltaLikeTable:
         Partitioned tables use ``delete`` (hive-materialized partition
         columns are not in the physical file, so the predicate could not
         be evaluated against raw per-file reads uniformly)."""
-        active = self._active_files()
+        snap = self.snapshot()
+        active = snap.adds
         if any(a.get("partitionValues") for a in active):
             raise ValueError(
                 "DV delete on partitioned tables is not supported; "
@@ -1238,11 +1292,12 @@ class DeltaLikeTable:
             for a in active
         ]
         base = (
-            spark.read.parquet(*files)
+            spark.read.schema(snap.schema(physical=True))
+            .parquet(*files)
             .withColumn("_fp", F.col("_metadata.file_path"))
             .withColumn("_ri", F.col("_metadata.row_index"))
         )
-        mapping = self._mapped_fields()
+        mapping = snap.mapped_fields()
         if mapping:
             # the raw scan carries PHYSICAL names; the caller's predicate
             # speaks LOGICAL — re-alias before evaluating it
@@ -1259,7 +1314,6 @@ class DeltaLikeTable:
             .agg(F.sort_array(F.collect_list("_ri")).alias("idxs"))
             .collect()
         )  # bounded: ≤ max_cardinality rows per file, checked below
-        now = int(time.time() * 1000)
         actions: list[dict] = []
         for row in hits:
             add = by_uri.get(row["_fp"])
@@ -1298,19 +1352,11 @@ class DeltaLikeTable:
                     "sizeInBytes": len(payload),
                     "cardinality": len(idxs),
                 }
-            actions.append(
-                {
-                    "remove": {
-                        "path": add["path"],
-                        "deletionTimestamp": now,
-                        "dataChange": True,
-                    }
-                }
-            )
+            actions.extend(_removes([add["path"]]))
             actions.append({"add": {**add, "deletionVector": desc}})
         if not actions:
-            return self.latest_version
-        return self._commit(actions, operation="DELETE")
+            return snap.version
+        return self._commit(actions, operation="DELETE", base=snap)
 
     def restore(self, version: int) -> int:
         """``RESTORE TABLE ... TO VERSION AS OF version``: commit a new
@@ -1320,21 +1366,14 @@ class DeltaLikeTable:
         work, exactly Delta's RESTORE). The restore is itself a new
         commit: history stays intact and time-travelable, and restoring
         past a VACUUM fails on read just as in Delta (the old files are
-        physically gone)."""
-        target = {a["path"]: a for a in self._active_files(as_of=version)}
-        current = {a["path"]: a for a in self._active_files()}
-        now = int(time.time() * 1000)
-        actions: list[dict] = [
-            {
-                "remove": {
-                    "path": p,
-                    "deletionTimestamp": now,
-                    "dataChange": True,
-                }
-            }
-            for p in current
-            if p not in target
-        ]
+        physically gone). The target's metaData is re-committed when its
+        schema, partitioning or configuration differs from the current
+        one, as Delta's RESTORE does: a restored table reads, and accepts
+        appends, with the schema its restored files were written with."""
+        target_snap, current_snap = self.snapshot(as_of=version), self.snapshot()
+        target, current = target_snap.live, current_snap.live
+        actions = _removes(p for p in current if p not in target)
+
         def _canon(a: dict) -> dict:
             # drop null-valued keys (a checkpoint round trip materializes
             # "deletionVector": None) so content comparison is stable
@@ -1348,7 +1387,16 @@ class DeltaLikeTable:
             for p, add in target.items()
             if p not in current or _canon(current[p]) != _canon(add)
         )
-        return self._commit(actions, operation="RESTORE")
+
+        def _shape(meta: dict | None) -> dict:
+            keys = ("schemaString", "partitionColumns", "configuration")
+            return {k: (meta or {}).get(k) or None for k in keys}
+
+        if target_snap.metadata is not None and _shape(
+            target_snap.metadata
+        ) != _shape(current_snap.metadata):
+            actions.append({"metaData": target_snap.metadata})
+        return self._commit(actions, operation="RESTORE", base=current_snap)
 
     def clone_to(self, target_path: str, as_of: int | None = None) -> "DeltaLikeTable":
         """SHALLOW CLONE: a new table whose first commit re-ADDs the
@@ -1362,8 +1410,9 @@ class DeltaLikeTable:
         root."""
         clone = DeltaLikeTable(target_path)
         os.makedirs(target_path, exist_ok=True)
+        snap = self.snapshot(as_of)
         actions: list[dict] = []
-        for a in self._active_files(as_of=as_of):
+        for a in snap.adds:
             src = os.path.join(self.path, a["path"])
             add = {**a, "path": os.path.abspath(src)}
             dv = a.get("deletionVector")
@@ -1380,9 +1429,8 @@ class DeltaLikeTable:
                     ),
                 }
             actions.append({"add": add})
-        metas = [m for m in self._actions(upto=as_of) if "metaData" in m]
-        if metas:
-            actions.append(metas[-1])
+        if snap.metadata is not None:
+            actions.append({"metaData": snap.metadata})
         clone._commit(actions, operation="CLONE")
         return clone
 
@@ -1394,11 +1442,13 @@ class DeltaLikeTable:
         layout). At 100 TB this is the small-files cure for
         streaming-append tables, run as a maintenance job; old versions
         stay readable until vacuumed."""
-        current = self.read(spark)
-        return self.write(
-            current.coalesce(target_files), mode="overwrite",
+        snap = self.snapshot()
+        return self._write(
+            self._read(spark, snap).coalesce(target_files),
+            snap,
+            mode="overwrite",
             operation="OPTIMIZE",
-        )
+        ).version
 
     def vacuum(
         self, retention_ms: int = 0, now_ms: int | None = None
@@ -1427,7 +1477,7 @@ class DeltaLikeTable:
         cutoff = (
             int(time.time() * 1000) if now_ms is None else now_ms
         ) - retention_ms
-        active = self._active_files()
+        active = self.snapshot().adds
         live = {a["path"] for a in active}
         # DV sidecars the CURRENT snapshot still resolves — never touched
         live_dv = {
@@ -1552,7 +1602,8 @@ class DeltaLikeTable:
         target rows get NULL (Delta's automatic-schema-evolution
         semantics for MERGE); the overwrite commit's metaData action
         carries the widened schemaString."""
-        target = self.read(spark)
+        snap = self.snapshot()
+        target = self._read(spark, snap)
         cols = target.columns
         evolved = (
             [c for c in source.columns if c not in cols and c != on]
@@ -1611,5 +1662,5 @@ class DeltaLikeTable:
                 F.col(f"s.{on}").alias(on),
                 *out_cols,
             )
-        self.write(merged, mode="overwrite", operation="MERGE")
-        return self.read(spark)
+        post = self._write(merged, snap, mode="overwrite", operation="MERGE")
+        return self._read(spark, post)

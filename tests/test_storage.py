@@ -391,12 +391,12 @@ def test_append_schema_enforcement(spark, tbl):
         tbl.write(widened, mode="append")
     # with the opt-in → lands; merged read surfaces NULL for old files
     tbl.write(widened, mode="append", merge_schema=True)
-    got = {r.k: r.w for r in tbl.read(spark, merge_schema=True).collect()}
+    got = {r.k: r.w for r in tbl.read(spark).collect()}
     assert got == {1: None, 2: "x"}
     # missing (nullable) column is fine, like Delta
     tbl.write(spark.createDataFrame([(3,)], "k int"), mode="append")
     assert sorted(
-        r.k for r in tbl.read(spark, merge_schema=True).collect()
+        r.k for r in tbl.read(spark).collect()
     ) == [1, 2, 3]
 
 
@@ -964,3 +964,125 @@ def test_dynamic_partition_overwrite_new_partition_is_pure_append(
     after = {a["path"] for a in tbl._active_files()}
     assert before <= after  # nothing removed
     assert tbl.read(spark).count() == 2
+
+
+def test_append_omitting_nullable_column_keeps_logged_schema(spark, tbl):
+    # an append that omits a nullable column must not shrink the table's
+    # logged schema: the omitted column reads as NULL for the new rows
+    import json
+    import os
+
+    tbl.write(
+        spark.createDataFrame([(1, "x")], "k bigint, b string"), mode="overwrite"
+    )
+    tbl.write(spark.createDataFrame([(2,)], "k bigint"), mode="append")
+    with open(os.path.join(tbl._log_dir, f"{1:020d}.json")) as f:
+        acts = [json.loads(ln) for ln in f]
+    meta = [a["metaData"] for a in acts if "metaData" in a][-1]
+    logged = json.loads(meta["schemaString"])["fields"]
+    assert [(f["name"], f["type"]) for f in logged] == [
+        ("k", "long"), ("b", "string"),
+    ]
+    assert sorted((r.k, r.b) for r in tbl.read(spark).collect()) == [
+        (1, "x"), (2, None),
+    ]
+
+
+def test_restore_recommits_target_schema(spark, tbl):
+    # restoring past a type-changing overwrite brings the old schema
+    # back: the restored table reads, and takes appends, with it
+    tbl.write(_df(spark, [(1, "a")]), mode="overwrite")                # v0
+    tbl.write(
+        spark.createDataFrame([(2, 2.0)], "k int, v double"), mode="overwrite"
+    )                                                                   # v1
+    tbl.restore(0)                                                      # v2
+    assert dict(tbl.read(spark).dtypes)["v"] == "string"
+    tbl.write(_df(spark, [(3, "c")]), mode="append")
+    assert sorted((r.k, r.v) for r in tbl.read(spark).collect()) == [
+        (1, "a"), (3, "c"),
+    ]
+
+
+def _jobs_building(spark, build) -> int:
+    """Spark jobs launched while ``build`` constructs (and does not run)
+    a DataFrame, counted under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_builds_without_spark_jobs(spark, tmp_path):
+    # schema and file list come from the log: no read launches a job
+    # to infer a schema from parquet footers or to list its files
+    def table(name):
+        return DeltaLikeTable(str(tmp_path / name))
+
+    plain = table("plain")
+    plain.write(_df(spark, [(1, "a"), (2, "b")]).coalesce(1), mode="overwrite")
+    plain.write(_df(spark, [(3, "c")]).coalesce(1), mode="append")
+    part = table("part")
+    part.write(
+        spark.createDataFrame([(1, "a"), (2, "b")], "k int, pt string"),
+        mode="overwrite",
+        partition_by=["pt"],
+    )
+    mapped = table("mapped")
+    mapped.write(_df(spark, [(1, "a")]), mode="overwrite")
+    mapped.rename_column("v", "value")
+    dv = table("dv")
+    dv.write(spark.range(20), mode="overwrite")
+    dv.delete_with_dv(spark, F.col("id") < 5)
+    # more files than Spark lists without a job by default (32)
+    many = table("many")
+    many.write(spark.range(0, 40, 1, 40), mode="overwrite")
+    assert len(many.live_files()) == 40
+    builds = {
+        "plain": lambda: plain.read(spark),
+        "as_of": lambda: plain.read(spark, as_of=0),
+        "stats_filter": lambda: plain.read(spark, stats_filter={"k": (3, 3)}),
+        "pruned_to_empty": lambda: plain.read(
+            spark, stats_filter={"k": (9, 9)}
+        ),
+        "partitioned": lambda: part.read(spark, partition_filter={"pt": "a"}),
+        "column_mapped": lambda: mapped.read(spark),
+        "deletion_vector": lambda: dv.read(spark),
+        "many_files": lambda: many.read(spark),
+    }
+    jobs = {name: _jobs_building(spark, b) for name, b in builds.items()}
+    assert jobs == dict.fromkeys(builds, 0)
+    assert [r.k for r in builds["stats_filter"]().collect()] == [3]
+    assert builds["pruned_to_empty"]().columns == ["k", "v"]
+    assert builds["column_mapped"]().columns == ["k", "value"]
+    assert sorted(r.id for r in dv.read(spark).collect()) == list(range(5, 20))
+    assert many.read(spark).count() == 40
+
+
+def test_checkpoint_keeps_table_configuration(spark, tbl):
+    # the checkpoint carries metaData.configuration: constraints and the
+    # column-mapping mode survive it
+    from dbt_local_duckdb_deltalake_project_spark.sources.deltalike import (
+        CHECKPOINT_INTERVAL,
+    )
+
+    tbl.write(_df(spark, [(0, "x")]), mode="overwrite")
+    tbl.rename_column("v", "value")
+    tbl.add_check_constraint("k_nonneg", "k >= 0")
+    while tbl.latest_version < CHECKPOINT_INTERVAL:
+        tbl.write(
+            spark.createDataFrame(
+                [(tbl.latest_version, "y")], "k int, value string"
+            ),
+            mode="append",
+        )
+    assert tbl._last_checkpoint()["version"] == CHECKPOINT_INTERVAL
+    assert tbl.check_constraints() == {"k_nonneg": "k >= 0"}
+    got = tbl.read(spark)
+    assert got.columns == ["k", "value"]
+    assert got.filter("value IS NULL").count() == 0
